@@ -4,12 +4,25 @@ Reference: ``KMeans`` (/root/reference/src/deeptime/clustering/
 _kmeans.py:148-472; C++ Lloyd loop kmeans_bits.h with OpenMP) and
 ``MiniBatchKMeans`` (:474-559).
 
-Spark realization: MLlib's KMeans is the idiomatic replacement — its
-k-means|| init (Bahmani et al.) is the distributed analogue of kmeans++
-(reference :24-56), and its Lloyd iterations are map-side partial
-aggregations. We adapt our array<double> schema via array_to_vector and
-return a driver-side ClusterModel so downstream assignment composes with
-the rest of the engine without MLlib types leaking out.
+``KMeans.fit`` has two regimes, split by the deep estimators' bound
+``decomposition.deep.DRIVER_FIT_MAX_ELEMS`` (rows x d elements, read at
+call time):
+
+- **driver** (rows x d <= bound): a limit-1 job probes d, then one Arrow
+  collect of at most ``bound // d + 1`` rows. If it returns no more than
+  ``bound // d`` rows and at least ``n_clusters``, the rows are sorted
+  lexicographically and fit in numpy: seeded kmeans++ (reference
+  :24-56) or ``initial_centers``, then a blocked Lloyd loop. Two Spark
+  jobs in all, and the result does not depend on partition layout —
+  the split the reference keeps between its C++ kernels and numpy.
+- **MLlib** (larger inputs, or a probe that overflows): MLlib's KMeans,
+  whose k-means|| init (Bahmani et al.) is the distributed analogue of
+  kmeans++ and whose Lloyd iterations are map-side partial aggregations.
+  We adapt our array<double> schema via array_to_vector and return a
+  driver-side ClusterModel so MLlib types do not leak out.
+
+Both regimes stop when no center moves more than ``tolerance``
+(Euclidean), and both report the summed squared distance as inertia.
 """
 
 from __future__ import annotations
@@ -22,7 +35,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from deeptime_spark.base import Estimator
-from deeptime_spark.clustering.cluster_model import ClusterModel
+from deeptime_spark.clustering.cluster_model import ClusterModel, _pairwise_sq_dists
+
+# rows per distance block in the driver Lloyd loop: peak memory is
+# O(block * k) floats whatever the number of rows
+_DRIVER_BLOCK_ROWS = 8192
 
 
 class KMeansModel(ClusterModel):
@@ -34,9 +51,59 @@ class KMeansModel(ClusterModel):
         self.inertia = inertia
 
 
+def _assign_blocked(X: np.ndarray, centers: np.ndarray):
+    """(nearest-center index, squared distance) per row, computed in
+    blocks of ``_DRIVER_BLOCK_ROWS`` rows."""
+    n = X.shape[0]
+    assign = np.empty(n, dtype=np.int64)
+    d2 = np.empty(n, dtype=np.float64)
+    for s in range(0, n, _DRIVER_BLOCK_ROWS):
+        D = _pairwise_sq_dists(X[s:s + _DRIVER_BLOCK_ROWS], centers)
+        a = np.argmin(D, axis=1)
+        assign[s:s + len(a)] = a
+        d2[s:s + len(a)] = D[np.arange(len(a)), a]
+    return assign, np.clip(d2, 0.0, None)
+
+
+def _lloyd_numpy(X: np.ndarray, centers: np.ndarray, max_iter: int, tolerance: float):
+    """Driver Lloyd loop -> (centers, inertia, converged).
+
+    Converged when the largest Euclidean center shift is <= tolerance
+    (MLlib's rule); an empty cluster keeps its previous center; inertia
+    is the summed squared distance to the final centers (MLlib's
+    trainingCost)."""
+    centers = np.array(centers, dtype=np.float64)
+    k, d = centers.shape
+    converged = False
+    for _ in range(max_iter):
+        assign, _ = _assign_blocked(X, centers)
+        counts = np.bincount(assign, minlength=k)
+        sums = np.stack(
+            [np.bincount(assign, weights=X[:, j], minlength=k) for j in range(d)], axis=1
+        )
+        new = centers.copy()
+        full = counts > 0
+        new[full] = sums[full] / counts[full, None]
+        shift2 = float(((new - centers) ** 2).sum(axis=1).max())
+        centers = new
+        if shift2 <= tolerance * tolerance:
+            converged = True
+            break
+    _, d2 = _assign_blocked(X, centers)
+    return centers, float(d2.sum()), converged
+
+
 class KMeans(Estimator):
     """ctor mirrors reference (:148-236): n_clusters, max_iter, tolerance,
-    init_strategy ('kmeans++' -> k-means||), fixed_seed, initial_centers."""
+    init_strategy, fixed_seed, initial_centers.
+
+    Inputs of at most ``DRIVER_FIT_MAX_ELEMS`` elements (rows x d) are
+    fit on the driver after one collect: seeded kmeans++ (or
+    ``initial_centers``) and a numpy Lloyd loop on the rows sorted
+    lexicographically, so the model is the same for any partitioning.
+    Larger inputs go to MLlib, with ``init_strategy='kmeans++'`` mapped
+    to k-means||; MLlib takes no initial model, so ``initial_centers``
+    raises there. See the module docstring for the probe."""
 
     def __init__(
         self,
@@ -57,10 +124,60 @@ class KMeans(Estimator):
         self.initial_centers = initial_centers
         self.x_col = x_col
 
+    def _driver_rows(self, df: DataFrame) -> Optional[np.ndarray]:
+        """The whole input as a lexicographically sorted (n, d) array when
+        it fits the driver bound and has >= n_clusters rows, else None.
+        At most two jobs: the width probe and one Arrow collect."""
+        from deeptime_spark.decomposition import deep
+        from deeptime_spark.operators.moments import feature_dim
+
+        bound = deep.DRIVER_FIT_MAX_ELEMS
+        if bound < self.n_clusters:
+            return None
+        d = feature_dim(df, self.x_col)
+        cap = bound // d if d else 0
+        if cap < self.n_clusters:
+            return None
+        cols = [F.col(self.x_col).getItem(j).alias(f"_x{j}") for j in range(d)]
+        X = df.select(*cols).limit(cap + 1).toPandas().to_numpy(dtype=np.float64)
+        if not self.n_clusters <= len(X) <= cap:
+            return None
+        return X[np.lexsort(X.T[::-1])]
+
+    def _init_centers(self, X: np.ndarray) -> np.ndarray:
+        if self.initial_centers is not None:
+            centers = np.asarray(self.initial_centers, dtype=np.float64)
+            if centers.shape != (self.n_clusters, X.shape[1]):
+                raise ValueError(
+                    f"initial_centers has shape {centers.shape}, "
+                    f"expected ({self.n_clusters}, {X.shape[1]})"
+                )
+            return centers
+        rng = np.random.default_rng(self.seed)
+        if self.init_strategy == "kmeans++":
+            return kmeanspp_init(X, self.n_clusters, rng)
+        return X[rng.choice(len(X), self.n_clusters, replace=False)]
+
     def fit(self, df: DataFrame) -> "KMeans":
+        X = self._driver_rows(df)
+        if X is None:
+            self._model = self._fit_mllib(df)
+        else:
+            centers, inertia, converged = _lloyd_numpy(
+                X, self._init_centers(X), self.max_iter, self.tolerance
+            )
+            self._model = KMeansModel(centers, inertia=inertia, converged=converged)
+        return self
+
+    def _fit_mllib(self, df: DataFrame) -> KMeansModel:
         from pyspark.ml.clustering import KMeans as MLKMeans
         from pyspark.ml.functions import array_to_vector
 
+        if self.initial_centers is not None:
+            raise ValueError(
+                "initial_centers is honoured only below DRIVER_FIT_MAX_ELEMS: "
+                "MLlib's KMeans takes no initial model"
+            )
         # persist the assembled vectors: k-means|| init + every Lloyd
         # iteration re-reads the input (MLlib no longer auto-caches), so an
         # uncached source pays the scan + conversion ~2(init)+maxIter times
@@ -77,16 +194,17 @@ class KMeans(Estimator):
             fitted = km.fit(vec)
             centers = np.array([np.asarray(c) for c in fitted.clusterCenters()])
             inertia = float(fitted.summary.trainingCost)
+            converged = fitted.summary.numIter < self.max_iter
         finally:
             vec.unpersist()
-        self._model = KMeansModel(centers, inertia=inertia, converged=True)
-        return self
+        return KMeansModel(centers, inertia=inertia, converged=converged)
 
 
 class MiniBatchKMeans(KMeans):
     """Minibatch variant (reference :474-559): each ``partial_fit``/epoch
-    refines centers on a random sample — on Spark a sampled MLlib fit warm-
-    started from the previous centers via per-center weighted averaging.
+    refines centers on a random sample — on Spark a sampled ``KMeans`` fit
+    warm-started from the previous centers via per-center weighted
+    averaging.
 
     v1 approximation: Lloyd steps on a Bernoulli sample per epoch; the
     sample fraction replaces the reference's batch_size (cluster-friendly:
@@ -123,7 +241,7 @@ class MiniBatchKMeans(KMeans):
         batch = df.sample(fraction=min(1.0, frac), seed=self.seed + self._epoch)
         if self._centers is None and self.initial_centers is not None:
             # reference parity (_kmeans.py:148-236 ctor): caller-provided
-            # initial centers skip the MLlib init entirely and the first
+            # initial centers skip the KMeans init entirely and the first
             # batch performs a real minibatch update — the fully
             # deterministic path (the k-means|| seed stream is
             # MLlib-internal, replayable by no other engine)
@@ -136,7 +254,7 @@ class MiniBatchKMeans(KMeans):
             self._centers = centers0.copy()
             self._counts = np.ones(self.n_clusters)
         elif self._centers is None:
-            # init from an MLlib fit on the first batch
+            # init from a KMeans fit (driver or MLlib regime) on the first batch
             KMeans.fit(self, batch)
             self._centers = self._model.cluster_centers
             self._counts = np.ones(self.n_clusters)
@@ -214,15 +332,15 @@ class MiniBatchKMeans(KMeans):
 def kmeanspp_init(X: np.ndarray, k: int, rng: np.random.Generator) -> np.ndarray:
     """Seeded kmeans++ (reference _kmeans.py:24-56) on an in-memory sample
     via deterministic inverse-CDF draws — same rng, same sample, same
-    centers, on any machine."""
+    centers, on any machine. Keeps a running minimum of squared distances
+    to the chosen centers: O(n*k*d)."""
     n = X.shape[0]
     if n < k:
         raise ValueError(f"kmeans++ needs >= k={k} sample points, got {n}")
     centers = [X[int(rng.integers(n))].astype(np.float64)]
+    d2 = np.full(n, np.inf)
     for _ in range(1, k):
-        from deeptime_spark.clustering.cluster_model import _pairwise_sq_dists
-
-        d2 = _pairwise_sq_dists(X, np.asarray(centers)).min(axis=1)
+        d2 = np.minimum(d2, _pairwise_sq_dists(X, centers[-1][None, :])[:, 0])
         d2 = np.clip(d2, 0.0, None)
         total = float(d2.sum())
         if total <= 0.0:
@@ -302,10 +420,11 @@ class DeterministicKMeans(Estimator):
     """Bit-reproducible distributed k-means: identical results on any
     partition count, row order, or cluster size.
 
-    MLlib's k-means|| (the ``KMeans`` wrapper above) is the throughput
-    path, but its init sampling is framework-internal and its centroid
-    updates are floating-point sums in shuffle order — rerunning on a
-    different layout gives a slightly different model. This estimator
+    Above the driver bound the ``KMeans`` wrapper above runs MLlib's
+    k-means||, the throughput path, but its init sampling is
+    framework-internal and its centroid updates are floating-point sums
+    in shuffle order — rerunning on a different layout gives a slightly
+    different model. This estimator
     trades a little per-iteration CPU for exact reproducibility:
 
     - **init**: seeded kmeans++ on the ``sample_size`` lowest rows by

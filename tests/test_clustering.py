@@ -40,6 +40,82 @@ def test_kmeans_recovers_blob_centers(spark, blobs, blobs_df):
     assert model.inertia > 0
 
 
+def _job_ids(spark, group, fn):
+    """Run fn() under a job group; return (result, Spark job ids)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _force_mllib(monkeypatch):
+    from deeptime_spark.decomposition import deep
+
+    monkeypatch.setattr(deep, "DRIVER_FIT_MAX_ELEMS", 0)
+
+
+def test_kmeans_mllib_path_recovers_blob_centers(spark, blobs, blobs_df, monkeypatch):
+    """Above the driver bound (forced here) KMeans runs MLlib and still
+    recovers the blobs; converged comes from MLlib's iteration count."""
+    _, true_centers = blobs
+    _force_mllib(monkeypatch)
+    model, jobs = _job_ids(
+        spark, "kmeans-mllib", lambda: KMeans(n_clusters=3, fixed_seed=17).fit(blobs_df).fetch_model()
+    )
+    assert len(jobs) > 2  # k-means|| and Lloyd rounds, not the driver probe
+    _assert_centers_match(model.cluster_centers, true_centers, atol=0.3)
+    assert model.inertia > 0
+    assert model.converged
+    one = KMeans(n_clusters=3, max_iter=1, fixed_seed=17).fit(blobs_df).fetch_model()
+    assert not one.converged
+
+
+def test_kmeans_driver_regime_is_layout_invariant(spark, blobs):
+    X, _ = blobs
+    rows = [(i, x.tolist()) for i, x in enumerate(X)]
+    df1 = spark.createDataFrame(rows, "i long, x array<double>").repartition(1)
+    df7 = spark.createDataFrame(rows[::-1], "i long, x array<double>").repartition(7)
+    m1 = KMeans(n_clusters=3, fixed_seed=5).fit(df1).fetch_model()
+    m7 = KMeans(n_clusters=3, fixed_seed=5).fit(df7).fetch_model()
+    assert np.array_equal(m1.cluster_centers, m7.cluster_centers)
+    assert m1.inertia == m7.inertia
+    assert m1.converged
+
+
+def test_kmeans_driver_regime_launches_at_most_two_jobs(spark, blobs):
+    X, true_centers = blobs
+    # four partitions without an exchange, whose AQE stage would add jobs
+    rdd = spark.sparkContext.parallelize([(x.tolist(),) for x in X], 4)
+    df = spark.createDataFrame(rdd, "x array<double>")
+    model, jobs = _job_ids(
+        spark, "kmeans-driver", lambda: KMeans(n_clusters=3, fixed_seed=17).fit(df).fetch_model()
+    )
+    assert 1 <= len(jobs) <= 2
+    _assert_centers_match(model.cluster_centers, true_centers, atol=0.3)
+
+
+def test_kmeans_initial_centers(spark, blobs, blobs_df, monkeypatch):
+    """initial_centers replaces kmeans++ in the driver regime: one Lloyd
+    step from them is the mean of each Voronoi cell. MLlib cannot take
+    them, so the forced MLlib path raises."""
+    X, _ = blobs
+    c0 = np.array([[1.0, 1.0], [9.0, 1.0], [1.0, 9.0]])
+    model = KMeans(n_clusters=3, max_iter=1, initial_centers=c0).fit(blobs_df).fetch_model()
+    a = np.argmin(((X[:, None, :] - c0[None]) ** 2).sum(-1), axis=1)
+    want = np.array([X[a == j].mean(axis=0) for j in range(3)])
+    np.testing.assert_allclose(model.cluster_centers, want, rtol=1e-12, atol=1e-12)
+    assert not model.converged  # one step from c0 moves every center
+    with pytest.raises(ValueError, match="initial_centers has shape"):
+        KMeans(n_clusters=3, initial_centers=c0[:2]).fit(blobs_df)
+    _force_mllib(monkeypatch)
+    with pytest.raises(ValueError, match="MLlib"):
+        KMeans(n_clusters=3, initial_centers=c0).fit(blobs_df)
+
+
 def test_cluster_model_assignment_is_nearest(spark, blobs_df):
     centers = np.array([[0.0, 0.0], [10.0, 0.0], [0.0, 10.0]])
     model = ClusterModel(centers)
@@ -227,6 +303,52 @@ def test_deterministic_kmeans_driver_dispatch_bit_equal(spark):
     # sample_size > n: the driver dispatch fires on the identical sample
     m_loc = DeterministicKMeans(sample_size=91, **est).fit(df).fetch_model()
     assert np.array_equal(m_dist.cluster_centers, m_loc.cluster_centers)
+
+
+def test_kmeanspp_init_matches_quadratic_reference():
+    """The running-minimum kmeans++ draws the same centers as the
+    recompute-every-distance formulation it replaced."""
+    from deeptime_spark.clustering.kmeans import kmeanspp_init
+
+    def quadratic(X, k, rng):
+        centers = [X[int(rng.integers(len(X)))]]
+        for _ in range(1, k):
+            d2 = ((X[:, None, :] - np.asarray(centers)[None]) ** 2).sum(-1).min(axis=1)
+            r = float(rng.random()) * float(d2.sum())
+            idx = min(int(np.searchsorted(np.cumsum(d2), r, side="right")), len(X) - 1)
+            centers.append(X[idx])
+        return np.asarray(centers)
+
+    X = np.random.default_rng(21).normal(size=(500, 3))
+    got = kmeanspp_init(X, 12, np.random.default_rng(4))
+    np.testing.assert_array_equal(got, quadratic(X, 12, np.random.default_rng(4)))
+
+
+def test_deterministic_kmeans_env_forces_distributed_loop(spark, monkeypatch):
+    """DEEPTIME_KMEANS_DRIVER_DISPATCH=0 (the forced-distributed gate's
+    switch) skips the driver replay even when the sample is the whole
+    relation, with bit-identical centers."""
+    from deeptime_spark.clustering import kmeans as km_mod
+
+    rng = np.random.default_rng(56)
+    X = rng.normal(size=(60, 3))
+    rows = [(int(i), X[i].tolist()) for i in range(len(X))]
+    df = spark.createDataFrame(rows, "id long, x array<double>").repartition(3)
+    calls = []
+    replay = km_mod.deterministic_kmeans_numpy
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return replay(*args, **kwargs)
+
+    monkeypatch.setattr(km_mod, "deterministic_kmeans_numpy", spy)
+    est = dict(n_clusters=3, seed=9, max_iter=8, sample_size=100, order_col="id")
+    m_loc = km_mod.DeterministicKMeans(**est).fit(df).fetch_model()
+    assert calls == [1]
+    monkeypatch.setenv("DEEPTIME_KMEANS_DRIVER_DISPATCH", "0")
+    m_dist = km_mod.DeterministicKMeans(**est).fit(df).fetch_model()
+    assert calls == [1]
+    assert np.array_equal(m_loc.cluster_centers, m_dist.cluster_centers)
 
 
 def test_deterministic_kmeans_assignment_layout_invariant(spark):

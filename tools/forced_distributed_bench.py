@@ -14,6 +14,13 @@ dispatch-gated bench query twice per fixture:
   DEEPTIME_KMEANS_DRIVER_DISPATCH=0) — results are bit-identical by the
   operators' cross-path contracts (pinned in tests/), so both modes run
   the SAME queries and the oracle stays green either way.
+  DEEPTIME_DRIVER_FIT_MAX_ELEMS gates the deep-estimator fits (VAMPNet,
+  TAE, TVAE) and ``KMeans``, whose driver regime sits under the same
+  bound and whose MLlib regime takes over when it is 0.
+
+Every FORCE_ENV name is checked against the deeptime_spark sources at
+start-up: a mistyped name would otherwise time the driver path under
+the "distributed" label.
 
 Fixtures: sf0.1 and the x8 replicated weak-scaling dir
 (tools/scale_bench.py's fixture — built on first use). Each
@@ -30,6 +37,7 @@ import json
 import os
 import subprocess
 import sys
+from pathlib import Path
 
 QUERIES = [
     # §14 graph kernels
@@ -47,6 +55,8 @@ QUERIES = [
     # connected_components (driver union-find convention)
     "dedup_components",
 ]
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 FORCE_ENV = {
     "DEEPTIME_DRIVER_TRI_MAX_EDGES": "0",
@@ -98,13 +108,21 @@ spark.stop()
 """
 
 
+def check_force_env() -> None:
+    """Fail unless every FORCE_ENV name occurs in the package sources."""
+    pkg = Path(REPO, "deeptime_spark")
+    text = "\n".join(p.read_text(encoding="utf-8") for p in pkg.rglob("*.py"))
+    missing = [name for name in FORCE_ENV if name not in text]
+    if missing:
+        raise SystemExit(f"FORCE_ENV names not read anywhere in deeptime_spark/: {missing}")
+
+
 def run_child(sf_dir: str, mode: str, build_x8: bool) -> dict:
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ)
     if mode == "distributed":
         env.update(FORCE_ENV)
     code = _CHILD.format(
-        repo=repo, sf_dir=sf_dir, queries=QUERIES, build_x8=build_x8
+        repo=REPO, sf_dir=sf_dir, queries=QUERIES, build_x8=build_x8
     )
     r = subprocess.run(
         [sys.executable, "-c", code], env=env, capture_output=True, text=True,
@@ -120,6 +138,7 @@ def run_child(sf_dir: str, mode: str, build_x8: bool) -> dict:
 
 
 def main() -> int:
+    check_force_env()
     with_x8 = "x8" in sys.argv[1:]
     fixtures = [("sf0.1", "/root/testdata/sf0.1", False)]
     if with_x8:
