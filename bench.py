@@ -3,7 +3,8 @@
 Runs a representative subset of ``__spark_entry__.queries()`` (heavy scan,
 shuffle, window, LSH, top-k, covariance, and estimator paths) on
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
-``{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}``.
+``{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}``
+plus warm-pass maps and ``errors``, the queries that failed in any pass.
 
 Materialization is a noop-sink write so Catalyst cannot prune the computed
 columns the way a bare count() would.
@@ -216,47 +217,42 @@ HEADLINE = [
 ]
 
 
+def run_pass(spark, qs, sf_dir: str, out: dict[str, float], errors: set[str]) -> None:
+    """Time every HEADLINE query into ``out``; a failing query records -1.0
+    there, its name in ``errors`` and its error on stderr."""
+    for name in HEADLINE:
+        fn = qs.get(name)
+        if fn is None:
+            continue
+        t0 = time.time()
+        try:
+            df = fn(spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
+            out[name] = round(time.time() - t0, 3)
+        except Exception as e:  # keep the bench line parseable even on error
+            out[name] = -1.0
+            errors.add(name)
+            print(f"bench error in {name}: {e}", file=sys.stderr)
+        # Session hygiene between queries: a single long-lived local JVM
+        # accumulates cached relations, broadcast blocks, and AQE plan
+        # state across 40+ queries; without this the later (heavier)
+        # queries pay 2-4x in GC pressure that says nothing about their
+        # own plans.  Each query is still timed with a cold cache, which
+        # is the honest per-operator number.
+        spark.catalog.clearCache()
+        spark.sparkContext._jvm.System.gc()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import __spark_entry__ as entrymod
+    from deeptime_spark.session import get_spark
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("deeptime-spark-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        # A 137-query x 3-pass session compiles ~1500 whole-stage-codegen
-        # units; the JVM's default 240MB reserved code cache fills, the
-        # JIT stops compiling and DEOPTIMIZES hot methods, and the widest
-        # codegen plans (the dedup family's 32/64-column hash aggregates)
-        # crawl at 3-5x on late passes — measured as corpus_tuned_dedup's
-        # warm trials landing at 38s vs its 8s idle-session profile. Any
-        # long-lived production driver sets this; so does the bench.
-        .config(
-            "spark.driver.extraJavaOptions",
-            # 512m stopped the r10 code-cache exhaustion at 138 queries;
-            # the r11 additions (147 wide-codegen plans x 3 passes)
-            # overflowed it again — corpus_tuned_dedup read 26 s warm in
-            # the session while timing 6.4 s in isolation. 1g holds the
-            # whole compiled-plan working set.
-            "-XX:ReservedCodeCacheSize=1g",
-        )
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("deeptime-spark-bench")
 
     qs = entrymod.queries()
     timings: dict[str, float] = {}
@@ -299,34 +295,14 @@ def main() -> None:
         simhash_signatures_df(tiny).write.format("noop").mode("overwrite").save()
         tiny.unpersist()
         spark.catalog.clearCache()
-    except Exception:
-        pass
-    def run_pass(out: dict[str, float]) -> None:
-        for name in HEADLINE:
-            fn = qs.get(name)
-            if fn is None:
-                continue
-            t0 = time.time()
-            try:
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                out[name] = round(time.time() - t0, 3)
-            except Exception as e:  # keep the bench line parseable even on error
-                out[name] = -1.0
-                print(f"bench error in {name}: {e}", file=sys.stderr)
-            # Session hygiene between queries: a single long-lived local JVM
-            # accumulates cached relations, broadcast blocks, and AQE plan
-            # state across 40+ queries; without this the later (heavier)
-            # queries pay 2-4x in GC pressure that says nothing about their
-            # own plans.  Each query is still timed with a cold cache, which
-            # is the honest per-operator number.
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
+    except Exception as e:  # the warm-up is optional; its failure is not
+        print(f"bench warm-up error: {e!r}", file=sys.stderr)
 
+    errors: set[str] = set()
     # Pass 1 (cold): first execution of each plan in this JVM — pays
     # whole-stage-codegen JIT for every not-yet-warmed operator shape.
     # Comparable to all prior BENCH_r* records.
-    run_pass(timings)
+    run_pass(spark, qs, sf_dir, timings, errors)
     # Passes 2..N (warm): same queries, same session — codegen/C2-compiled
     # plans, hot parquet footer caches. This models a long-lived cluster
     # session and is the regression-adjudication number: JIT noise that
@@ -341,7 +317,7 @@ def main() -> None:
     warm_trials: list[dict[str, float]] = []
     for _ in range(n_warm):
         wt: dict[str, float] = {}
-        run_pass(wt)
+        run_pass(spark, qs, sf_dir, wt, errors)
         warm_trials.append(wt)
     warm_timings: dict[str, float] = {}
     warm_spread: dict[str, float] = {}
@@ -370,6 +346,10 @@ def main() -> None:
         # comparisons must compare like-for-like or re-derive from here)
         "queries_warm_trials": warm_trials,
         "sf": sf,
+        # queries that failed in any pass: a failure records -1.0 and is
+        # left out of value/warm_value, so a smaller total with a
+        # non-empty list here is not a speed-up
+        "errors": sorted(errors),
     }
     # The PRINTED one-line JSON omits the per-trial section: with 152
     # queries x N trials the full line grew past what stdout-tail

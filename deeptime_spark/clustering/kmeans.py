@@ -5,8 +5,8 @@ _kmeans.py:148-472; C++ Lloyd loop kmeans_bits.h with OpenMP) and
 ``MiniBatchKMeans`` (:474-559).
 
 ``KMeans.fit`` has two regimes, split by the deep estimators' bound
-``decomposition.deep.DRIVER_FIT_MAX_ELEMS`` (rows x d elements, read at
-call time):
+``decomposition.deep.DRIVER_FIT_MAX_ELEMS`` (rows x d elements) through
+:func:`deeptime_spark.dispatch.on_driver`:
 
 - **driver** (rows x d <= bound): a limit-1 job probes d, then one Arrow
   collect of at most ``bound // d + 1`` rows. If it returns no more than
@@ -15,7 +15,8 @@ call time):
   :24-56) or ``initial_centers``, then a blocked Lloyd loop. Two Spark
   jobs in all, and the result does not depend on partition layout —
   the split the reference keeps between its C++ kernels and numpy.
-- **MLlib** (larger inputs, or a probe that overflows): MLlib's KMeans,
+- **MLlib** (larger inputs, a probe that overflows, or
+  ``DEEPTIME_FORCE_DISTRIBUTED=1``, which skips the probe): MLlib's KMeans,
   whose k-means|| init (Bahmani et al.) is the distributed analogue of
   kmeans++ and whose Lloyd iterations are map-side partial aggregations.
   We adapt our array<double> schema via array_to_vector and return a
@@ -27,7 +28,6 @@ Both regimes stop when no center moves more than ``tolerance``
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 import numpy as np
@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from deeptime_spark.base import Estimator
 from deeptime_spark.clustering.cluster_model import ClusterModel, _pairwise_sq_dists
+from deeptime_spark.dispatch import on_driver
 
 # rows per distance block in the driver Lloyd loop: peak memory is
 # O(block * k) floats whatever the number of rows
@@ -103,7 +104,8 @@ class KMeans(Estimator):
     lexicographically, so the model is the same for any partitioning.
     Larger inputs go to MLlib, with ``init_strategy='kmeans++'`` mapped
     to k-means||; MLlib takes no initial model, so ``initial_centers``
-    raises there. See the module docstring for the probe."""
+    raises there. ``DEEPTIME_FORCE_DISTRIBUTED=1`` sends every input to
+    MLlib. See the module docstring for the probe."""
 
     def __init__(
         self,
@@ -127,20 +129,27 @@ class KMeans(Estimator):
     def _driver_rows(self, df: DataFrame) -> Optional[np.ndarray]:
         """The whole input as a lexicographically sorted (n, d) array when
         it fits the driver bound and has >= n_clusters rows, else None.
-        At most two jobs: the width probe and one Arrow collect."""
-        from deeptime_spark.decomposition import deep
+        At most two jobs: the width probe and one Arrow collect, both
+        skipped when the distributed path is forced."""
+        from deeptime_spark.decomposition.deep import DRIVER_FIT_MAX_ELEMS as bound
         from deeptime_spark.operators.moments import feature_dim
 
-        bound = deep.DRIVER_FIT_MAX_ELEMS
-        if bound < self.n_clusters:
-            return None
-        d = feature_dim(df, self.x_col)
-        cap = bound // d if d else 0
-        if cap < self.n_clusters:
-            return None
-        cols = [F.col(self.x_col).getItem(j).alias(f"_x{j}") for j in range(d)]
-        X = df.select(*cols).limit(cap + 1).toPandas().to_numpy(dtype=np.float64)
-        if not self.n_clusters <= len(X) <= cap:
+        X = None
+
+        def rows_x_d() -> int:
+            # the size probe: at most bound // d + 1 rows, so an input
+            # past the bound shows as one row too many; when n_clusters
+            # rows alone overflow the bound nothing is collected
+            nonlocal X
+            d = feature_dim(df, self.x_col)
+            cap = bound // d if d else 0
+            if cap < self.n_clusters:
+                return self.n_clusters * d
+            cols = [F.col(self.x_col).getItem(j).alias(f"_x{j}") for j in range(d)]
+            X = df.select(*cols).limit(cap + 1).toPandas().to_numpy(dtype=np.float64)
+            return X.size
+
+        if not on_driver("KMeans", rows_x_d, bound) or X is None or len(X) < self.n_clusters:
             return None
         return X[np.lexsort(X.T[::-1])]
 
@@ -175,7 +184,7 @@ class KMeans(Estimator):
 
         if self.initial_centers is not None:
             raise ValueError(
-                "initial_centers is honoured only below DRIVER_FIT_MAX_ELEMS: "
+                "initial_centers is honoured only on the driver path: "
                 "MLlib's KMeans takes no initial model"
             )
         # persist the assembled vectors: k-means|| init + every Lloyd
@@ -392,14 +401,16 @@ def deterministic_kmeans_numpy(
     scale: int = 2**30,
 ):
     """Single-machine replica of ``DeterministicKMeans.fit`` — returns
-    (centers, n_iter). Bit-identical to the distributed fit because every
-    cross-row reduction in the algorithm is over integers and every
-    per-row computation uses the batch-shape-invariant distance kernel."""
+    (centers, n_iter, converged). Bit-identical to the distributed fit
+    because every cross-row reduction in the algorithm is over integers
+    and every per-row computation uses the batch-shape-invariant
+    distance kernel."""
     from deeptime_spark.clustering.metrics import _euclidean_batch_invariant
 
     rng = np.random.default_rng(seed)
     centers = kmeanspp_init(X_sample, n_clusters, rng)
     it = 0
+    converged = False
     for it in range(1, max_iter + 1):
         a = np.argmin(_euclidean_batch_invariant(X, centers), axis=1)
         counts, sums = _fixed_point_partials(X, a, n_clusters, scale)
@@ -412,8 +423,9 @@ def deterministic_kmeans_numpy(
         shift = float(np.abs(new - centers).max())
         centers = new
         if shift < tolerance:
+            converged = True
             break
-    return centers, it
+    return centers, it, converged
 
 
 class DeterministicKMeans(Estimator):
@@ -439,7 +451,11 @@ class DeterministicKMeans(Estimator):
       Integer addition is associative: the reduce is layout-independent.
 
     One scan per iteration; the shuffle is k rows of (count, int sums)
-    per partition — O(partitions * k * d) longs to the driver.
+    per partition — O(partitions * k * d) longs to the driver. When the
+    init sample is the whole relation the loop is replayed on the driver
+    instead (bit-identical); ``DEEPTIME_FORCE_DISTRIBUTED=1`` skips the
+    replay. ``converged`` is True only when the center shift fell below
+    ``tolerance`` within ``max_iter`` iterations.
     """
 
     def __init__(
@@ -485,15 +501,7 @@ class DeterministicKMeans(Estimator):
             .collect()
         )
         X0 = np.array([r[x_col] for r in sample_rows], dtype=np.float64)
-        # the env kill-switch exists ONLY for the forced-distributed
-        # scale gate (tools/forced_distributed_bench.py / SCALE.md):
-        # both paths are bit-identical (pinned by pytest), the gate
-        # needs the distributed Lloyd loop TIMED on inputs the driver
-        # replay normally absorbs. Default unchanged.
-        driver_ok = os.environ.get(
-            "DEEPTIME_KMEANS_DRIVER_DISPATCH", "1"
-        ) != "0"
-        if driver_ok and len(sample_rows) < self.sample_size:
+        if on_driver("DeterministicKMeans", len(sample_rows), self.sample_size - 1):
             # The bounded init sample IS the whole relation (limit
             # returned fewer rows than requested), so the Lloyd loop
             # runs driver-side on the rows already collected —
@@ -505,8 +513,9 @@ class DeterministicKMeans(Estimator):
             # inputs the driver already holds — the connected_components
             # "driver union-find below the bound, distributed above"
             # dispatch (guide §1.2/§5). Above sample_size rows the
-            # distributed path below is unchanged at any scale.
-            centers, self.n_iter_ = deterministic_kmeans_numpy(
+            # distributed path below is unchanged at any scale;
+            # DEEPTIME_FORCE_DISTRIBUTED=1 takes it for any size.
+            centers, self.n_iter_, converged = deterministic_kmeans_numpy(
                 X0,
                 X0,
                 k,
@@ -516,7 +525,7 @@ class DeterministicKMeans(Estimator):
                 scale=scale,
             )
             self._model = KMeansModel(
-                centers, converged=True, metric="euclidean-deterministic"
+                centers, converged=converged, metric="euclidean-deterministic"
             )
             return self
         rng = np.random.default_rng(self.seed)
@@ -544,6 +553,7 @@ class DeterministicKMeans(Estimator):
                 ]
             )
             n_iter = 0
+            converged = False
             for n_iter in range(1, self.max_iter + 1):
                 C = centers
 
@@ -584,11 +594,12 @@ class DeterministicKMeans(Estimator):
                 shift = float(np.abs(new - centers).max())
                 centers = new
                 if shift < self.tolerance:
+                    converged = True
                     break
         finally:
             vecs.unpersist()
         self.n_iter_ = n_iter
         self._model = KMeansModel(
-            centers, converged=True, metric="euclidean-deterministic"
+            centers, converged=converged, metric="euclidean-deterministic"
         )
         return self

@@ -120,8 +120,8 @@ def init_gaussian_from_data(
     """Gaussian initial guess: k-means centers as means, global std as
     sigma (reference init.gaussian.from_data,
     _init_gaussian_impl.py:4-60, uses GMM). One ``KMeans`` fit — on the
-    driver below DRIVER_FIT_MAX_ELEMS, MLlib's k-means|| above it — plus
-    one stats agg."""
+    driver up to ``KMeans``' size bound, MLlib's k-means|| above it or
+    under ``DEEPTIME_FORCE_DISTRIBUTED=1`` — plus one stats agg."""
     from deeptime_spark.clustering.kmeans import KMeans
 
     feat = df.select(F.array(F.col(obs_col).cast("double")).alias("x"))

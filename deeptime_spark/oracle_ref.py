@@ -2577,7 +2577,7 @@ def oracle_kmeans() -> str:
     sf = sf_dir()
     X = _embeddings(sf)  # ordered by vec_id; vec_ids are 0..n-1
     sample = X[:4096]
-    centers, _ = deterministic_kmeans_numpy(sample, X, n_clusters=8, seed=42, max_iter=16)
+    centers, _, _ = deterministic_kmeans_numpy(sample, X, n_clusters=8, seed=42, max_iter=16)
     assign = np.argmin(_euclidean_batch_invariant(X, centers), axis=1)
     rows = [(int(i), int(a)) for i, a in enumerate(assign)]
     return _values_sql(rows, ["vec_id", "cluster"], "bb")
@@ -2596,7 +2596,7 @@ def oracle_doc_topic_terms() -> str:
 
     sf = sf_dir()
     X = _embeddings(sf)
-    centers, _ = deterministic_kmeans_numpy(X[:4096], X, n_clusters=8, seed=42, max_iter=16)
+    centers, _, _ = deterministic_kmeans_numpy(X[:4096], X, n_clusters=8, seed=42, max_iter=16)
     assign = np.argmin(_euclidean_batch_invariant(X, centers), axis=1)
     docs = _docs(sf)
     tfc: dict = {}
@@ -2639,7 +2639,7 @@ def oracle_embedding_silhouette() -> str:
     sf = sf_dir()
     X = _embeddings(sf)
     sample = X[:4096]
-    centers, _ = deterministic_kmeans_numpy(sample, X, n_clusters=8, seed=42, max_iter=16)
+    centers, _, _ = deterministic_kmeans_numpy(sample, X, n_clusters=8, seed=42, max_iter=16)
     D = _euclidean_batch_invariant(X, centers)
     own = np.argmin(D, axis=1)
     a = D[np.arange(len(X)), own]
@@ -2896,7 +2896,7 @@ def oracle_semantic_dedup() -> str:
     sf = sf_dir()
     X = _embeddings(sf)  # ordered by vec_id; vec_ids are 0..n-1
     sample = X[:4096]
-    centers, _ = deterministic_kmeans_numpy(sample, X, n_clusters=8, seed=42, max_iter=8)
+    centers, _, _ = deterministic_kmeans_numpy(sample, X, n_clusters=8, seed=42, max_iter=8)
     assign = np.argmin(_euclidean_batch_invariant(X, centers), axis=1)
     threshold, max_cluster = 0.45, 4096
     rows = []

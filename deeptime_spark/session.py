@@ -20,6 +20,7 @@ def get_spark(app_name: str = "deeptime-spark", shuffle_partitions: int | None =
     - AQE on: runtime coalescing of shuffle partitions, skew-join splitting.
     - Arrow on: pandas UDFs exchange columnar batches, not pickled rows.
     - UTC session timezone: deterministic timestamp semantics vs the oracle.
+    - driver heap 8g, or ``$SPARK_DRIVER_MEMORY``; 1g JIT code cache (below).
     - shuffle partitions default to local core count; on a real cluster this
       is overridden to ~2-3x total cores (or left to AQE coalescing from a
       high initial value).
@@ -42,9 +43,22 @@ def get_spark(app_name: str = "deeptime-spark", shuffle_partitions: int | None =
         # parquet reader rejects by default — read as long nanos instead
         # (normalized back to timestamp in load_tables)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # A long-lived session compiles thousands of whole-stage-codegen
+        # units; the JVM's default 240MB reserved code cache fills, the JIT
+        # stops compiling and DEOPTIMIZES hot methods, and the widest
+        # codegen plans (the dedup family's 32/64-column hash aggregates)
+        # crawl at 3-5x on late passes. Measured in the bench session
+        # (bench.py): corpus_tuned_dedup's warm trials read 38 s there vs
+        # 8 s in an idle session; 512m held 138 queries but overflowed
+        # again at 147 wide-codegen plans x 3 passes (26 s vs 6.4 s);
+        # 1g holds the whole compiled-plan working set.
+        # A --driver-java-options in PYSPARK_SUBMIT_ARGS replaces this.
+        .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=1g")
         .config("spark.ui.enabled", "false")
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):

@@ -52,25 +52,19 @@ def _job_ids(spark, group, fn):
     return out, sc.statusTracker().getJobIdsForGroup(group)
 
 
-def _force_mllib(monkeypatch):
-    from deeptime_spark.decomposition import deep
-
-    monkeypatch.setattr(deep, "DRIVER_FIT_MAX_ELEMS", 0)
-
-
-def test_kmeans_mllib_path_recovers_blob_centers(spark, blobs, blobs_df, monkeypatch):
+def test_kmeans_mllib_path_recovers_blob_centers(spark, blobs, blobs_df, force_distributed):
     """Above the driver bound (forced here) KMeans runs MLlib and still
     recovers the blobs; converged comes from MLlib's iteration count."""
     _, true_centers = blobs
-    _force_mllib(monkeypatch)
-    model, jobs = _job_ids(
-        spark, "kmeans-mllib", lambda: KMeans(n_clusters=3, fixed_seed=17).fit(blobs_df).fetch_model()
-    )
+    with force_distributed():
+        model, jobs = _job_ids(
+            spark, "kmeans-mllib", lambda: KMeans(n_clusters=3, fixed_seed=17).fit(blobs_df).fetch_model()
+        )
+        one = KMeans(n_clusters=3, max_iter=1, fixed_seed=17).fit(blobs_df).fetch_model()
     assert len(jobs) > 2  # k-means|| and Lloyd rounds, not the driver probe
     _assert_centers_match(model.cluster_centers, true_centers, atol=0.3)
     assert model.inertia > 0
     assert model.converged
-    one = KMeans(n_clusters=3, max_iter=1, fixed_seed=17).fit(blobs_df).fetch_model()
     assert not one.converged
 
 
@@ -98,7 +92,7 @@ def test_kmeans_driver_regime_launches_at_most_two_jobs(spark, blobs):
     _assert_centers_match(model.cluster_centers, true_centers, atol=0.3)
 
 
-def test_kmeans_initial_centers(spark, blobs, blobs_df, monkeypatch):
+def test_kmeans_initial_centers(spark, blobs, blobs_df, force_distributed):
     """initial_centers replaces kmeans++ in the driver regime: one Lloyd
     step from them is the mean of each Voronoi cell. MLlib cannot take
     them, so the forced MLlib path raises."""
@@ -111,8 +105,7 @@ def test_kmeans_initial_centers(spark, blobs, blobs_df, monkeypatch):
     assert not model.converged  # one step from c0 moves every center
     with pytest.raises(ValueError, match="initial_centers has shape"):
         KMeans(n_clusters=3, initial_centers=c0[:2]).fit(blobs_df)
-    _force_mllib(monkeypatch)
-    with pytest.raises(ValueError, match="MLlib"):
+    with force_distributed(), pytest.raises(ValueError, match="MLlib"):
         KMeans(n_clusters=3, initial_centers=c0).fit(blobs_df)
 
 
@@ -275,7 +268,7 @@ def test_deterministic_kmeans_layout_invariant(spark):
     assert np.array_equal(m1.cluster_centers, m7.cluster_centers)
 
     sample = X[np.argsort(ids)][:64]
-    centers_np, _ = deterministic_kmeans_numpy(sample, X, 3, seed=7, max_iter=12)
+    centers_np, _, _ = deterministic_kmeans_numpy(sample, X, 3, seed=7, max_iter=12)
     assert np.array_equal(m1.cluster_centers, centers_np)
 
     # and it actually clusters: one center near each blob
@@ -324,10 +317,10 @@ def test_kmeanspp_init_matches_quadratic_reference():
     np.testing.assert_array_equal(got, quadratic(X, 12, np.random.default_rng(4)))
 
 
-def test_deterministic_kmeans_env_forces_distributed_loop(spark, monkeypatch):
-    """DEEPTIME_KMEANS_DRIVER_DISPATCH=0 (the forced-distributed gate's
-    switch) skips the driver replay even when the sample is the whole
-    relation, with bit-identical centers."""
+def test_deterministic_kmeans_env_forces_distributed_loop(spark, monkeypatch, force_distributed):
+    """DEEPTIME_FORCE_DISTRIBUTED=1 (the forced-distributed gate's switch)
+    skips the driver replay even when the sample is the whole relation,
+    with bit-identical centers."""
     from deeptime_spark.clustering import kmeans as km_mod
 
     rng = np.random.default_rng(56)
@@ -345,10 +338,35 @@ def test_deterministic_kmeans_env_forces_distributed_loop(spark, monkeypatch):
     est = dict(n_clusters=3, seed=9, max_iter=8, sample_size=100, order_col="id")
     m_loc = km_mod.DeterministicKMeans(**est).fit(df).fetch_model()
     assert calls == [1]
-    monkeypatch.setenv("DEEPTIME_KMEANS_DRIVER_DISPATCH", "0")
-    m_dist = km_mod.DeterministicKMeans(**est).fit(df).fetch_model()
+    with force_distributed():
+        m_dist = km_mod.DeterministicKMeans(**est).fit(df).fetch_model()
     assert calls == [1]
     assert np.array_equal(m_loc.cluster_centers, m_dist.cluster_centers)
+
+
+def test_deterministic_kmeans_reports_convergence(spark, force_distributed):
+    """converged is True only when the center shift fell below tolerance:
+    one Lloyd step from kmeans++ seeds on separated blobs moves every
+    center, so max_iter=1 is not converged — equally on the driver
+    replay, the forced distributed loop and the numpy replica."""
+    from deeptime_spark.clustering.kmeans import (
+        DeterministicKMeans,
+        deterministic_kmeans_numpy,
+    )
+
+    rng = np.random.default_rng(77)
+    X = np.vstack([rng.normal(c, 0.3, size=(20, 2)) for c in ((0, 0), (6, 0), (0, 6))])
+    rows = [(int(i), X[i].tolist()) for i in range(len(X))]
+    df = spark.createDataFrame(rows, "id long, x array<double>").repartition(3)
+    for max_iter, want in ((1, False), (50, True)):
+        est = dict(n_clusters=3, seed=5, max_iter=max_iter, sample_size=100, order_col="id")
+        replay = DeterministicKMeans(**est).fit(df).fetch_model()
+        with force_distributed():
+            dist = DeterministicKMeans(**est).fit(df).fetch_model()
+        assert replay.converged is want and dist.converged is want
+        assert np.array_equal(replay.cluster_centers, dist.cluster_centers)
+        _, _, converged = deterministic_kmeans_numpy(X, X, 3, seed=5, max_iter=max_iter)
+        assert converged is want
 
 
 def test_deterministic_kmeans_assignment_layout_invariant(spark):

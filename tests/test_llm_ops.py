@@ -398,7 +398,7 @@ def test_extract_features_real_wav_in_spark(spark):
     assert f99[0] != 1.0 and f99[0] != 2.0
 
 
-def test_connected_components_matches_union_find(spark):
+def test_connected_components_matches_union_find(spark, force_distributed):
     """Distributed min-label propagation equals a driver union-find on a
     graph with chains, a clique, and singleton-free isolated pairs."""
     import numpy as np
@@ -410,7 +410,8 @@ def test_connected_components_matches_union_find(spark):
     # both paths must agree: driver union-find fast path and the
     # distributed min-label propagation loop
     got_local = {r["node"]: r["component"] for r in connected_components(df).collect()}
-    got = {r["node"]: r["component"] for r in connected_components(df, local_threshold=0).collect()}
+    with force_distributed():
+        got = {r["node"]: r["component"] for r in connected_components(df).collect()}
     assert got_local == got
 
     parent = {}
@@ -442,19 +443,20 @@ def test_drop_near_duplicates_keeps_canonical(spark):
     assert kept == [0, 3, 4]
 
 
-def test_connected_components_long_chain_converges_fast(spark):
+def test_connected_components_long_chain_converges_fast(spark, force_distributed):
     """Pointer doubling: a 200-node path converges well within log-bound
     rounds (plain propagation would need ~200)."""
     from deeptime_spark.operators.dedup import connected_components
 
     edges = [(i, i + 1) for i in range(200)]
     df = spark.createDataFrame(edges, "id_a long, id_b long").repartition(8)
-    got = connected_components(df, max_iter=12, local_threshold=0).collect()
+    with force_distributed():
+        got = connected_components(df, max_iter=12).collect()
     assert len(got) == 201
     assert all(r["component"] == 0 for r in got)
 
 
-def test_connected_components_star_mode_equivalence(spark):
+def test_connected_components_star_mode_equivalence(spark, force_distributed):
     """mode="star" (Kiveris large-star/small-star) must be bit-identical
     to the default label-propagation mode on mixed graph shapes."""
     from deeptime_spark.operators.dedup import connected_components
@@ -462,10 +464,11 @@ def test_connected_components_star_mode_equivalence(spark):
     edges = [(0, 1), (1, 2), (2, 3), (10, 11), (11, 12), (20, 21),
              (5, 6), (6, 5), (30, 31), (31, 32), (32, 30), (7, 7)]
     df = spark.createDataFrame(edges, "id_a long, id_b long").repartition(4)
-    lab = {r["node"]: r["component"]
-           for r in connected_components(df, local_threshold=0).collect()}
-    star = {r["node"]: r["component"]
-            for r in connected_components(df, local_threshold=0, mode="star").collect()}
+    with force_distributed():
+        lab = {r["node"]: r["component"]
+               for r in connected_components(df).collect()}
+        star = {r["node"]: r["component"]
+                for r in connected_components(df, mode="star").collect()}
     assert star == lab
     # local fast path is identical regardless of mode
     loc = {r["node"]: r["component"]
@@ -473,7 +476,7 @@ def test_connected_components_star_mode_equivalence(spark):
     assert loc == star
 
 
-def test_connected_components_star_long_path_log_rounds(spark):
+def test_connected_components_star_long_path_log_rounds(spark, force_distributed):
     """A 300-node path (diameter 300) must converge in O(log d)
     alternations — 12 is far above log2(300) ~ 8.2 but far below the
     O(d) a naive propagation would need."""
@@ -483,7 +486,8 @@ def test_connected_components_star_long_path_log_rounds(spark):
 
     edges = [(i, i + 1) for i in range(300)]
     df = spark.createDataFrame(edges, "id_a long, id_b long").repartition(8)
-    got = connected_components(df, max_iter=12, local_threshold=0, mode="star").collect()
+    with force_distributed():
+        got = connected_components(df, max_iter=12, mode="star").collect()
     assert len(got) == 301
     assert all(r["component"] == 0 for r in got)
     with pytest.raises(ValueError):

@@ -689,7 +689,7 @@ def test_triangles_no_cartesian_all_equijoins(spark):
     assert "EvalPython" not in plan
 
 
-def test_kcore_small_regime_broadcasts_survivors(spark):
+def test_kcore_small_regime_broadcasts_survivors(spark, force_distributed):
     """k_core below the broadcast threshold must plan each peel round's
     semi-joins as broadcast joins — the O(|E|) edge relation must not
     shuffle per round (judge round-7 item 3)."""
@@ -711,13 +711,11 @@ def test_kcore_small_regime_broadcasts_survivors(spark):
         return orig(df)
 
     G.F.broadcast = spy
-    old_bound = G.DRIVER_GRAPH_MAX_EDGES
-    G.DRIVER_GRAPH_MAX_EDGES = 0  # force the distributed loop under test
     try:
-        G.k_core(edges, k=8)
+        with force_distributed():  # the distributed loop under test
+            G.k_core(edges, k=8)
     finally:
         G.F.broadcast = orig
-        G.DRIVER_GRAPH_MAX_EDGES = old_bound
     # two broadcast survivor sides per peel round, at least one round
     assert len(captured) >= 2
 

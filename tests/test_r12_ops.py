@@ -378,7 +378,7 @@ def test_token_jaccard_verify_matches_python_sets(spark):
     assert got == want
 
 
-def test_triangle_driver_dispatch_bit_equal(spark):
+def test_triangle_driver_dispatch_bit_equal(spark, force_distributed):
     """r12: the driver numpy compact-forward kernel produces exactly the
     distributed wedge join's per-node triangle counts and degrees, on a
     graph with hubs, multi-edges, self-loops, and both orientations."""
@@ -395,19 +395,15 @@ def test_triangle_driver_dispatch_bit_equal(spark):
         r.node: (r.n_triangles, r.degree)
         for r in G.triangle_counts(e, include_degree=True).collect()
     }
-    old = G.DRIVER_TRI_MAX_EDGES
-    try:
-        G.DRIVER_TRI_MAX_EDGES = 0  # force the distributed wedge join
+    with force_distributed():  # the distributed wedge join
         dist = {
             r.node: (r.n_triangles, r.degree)
             for r in G.triangle_counts(e, include_degree=True).collect()
         }
-    finally:
-        G.DRIVER_TRI_MAX_EDGES = old
     assert drv == dist and len(drv) > 100
 
 
-def test_graph_driver_dispatch_bit_equal(spark):
+def test_graph_driver_dispatch_bit_equal(spark, force_distributed):
     """r12: the driver numpy kernels for k-core, BFS, and synchronous
     label propagation are bit-identical to the distributed loops (all
     three results are integer-exact: unique fixed points for k-core and
@@ -423,12 +419,8 @@ def test_graph_driver_dispatch_bit_equal(spark):
 
     def both(fn):
         drv = fn()
-        old = G.DRIVER_GRAPH_MAX_EDGES
-        G.DRIVER_GRAPH_MAX_EDGES = 0  # force the distributed loops
-        try:
+        with force_distributed():  # the distributed loops
             dist = fn()
-        finally:
-            G.DRIVER_GRAPH_MAX_EDGES = old
         return drv, dist
 
     d, s = both(lambda: {r.node: r.degree for r in G.k_core(e, k=5).collect()})

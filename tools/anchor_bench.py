@@ -1,5 +1,5 @@
 """Idle-session anchor bench: re-time a handful of queries in a FRESH
-Spark session with bench.py's exact configs, 1 cold + N warm passes
+Spark session (``get_spark``, as bench.py uses), 1 cold + N warm passes
 (default 3), reporting per-query cold / warm-min / warm-spread.
 
 The adjudication tool for warm-bench drift (PLANS.md protocol): a
@@ -27,29 +27,13 @@ def main() -> int:
         print("usage: anchor_bench.py <query> [query ...]", file=sys.stderr)
         return 2
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     n_warm = int(os.environ.get("SPARK_GRAFT_ANCHOR_TRIALS", "3"))
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
+    from deeptime_spark.session import get_spark
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("deeptime-spark-anchor")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=1g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("deeptime-spark-anchor")
     qs = entrymod.queries()
     out: dict[str, dict] = {}
     for name in names:
@@ -71,7 +55,8 @@ def main() -> int:
             "warm_spread": round(max(warm) - min(warm), 3),
             "trials": trials,
         }
-    print(json.dumps({"sf_dir": sf_dir, "cpus": int(cpus), "anchors": out}))
+    cpus = spark.sparkContext.defaultParallelism
+    print(json.dumps({"sf_dir": sf_dir, "cpus": cpus, "anchors": out}))
     return 0
 
 

@@ -1,31 +1,24 @@
 """Forced-distributed scale gate for the driver-dispatched operators.
 
 The r12 driver dispatches (graph kernels, deep-estimator replay,
-DeterministicKMeans Lloyd, connected_components union-find) absorb the
-bench's sf0.1 inputs entirely, so the DISTRIBUTED code paths — the ones
-that matter at 100 TB — were exercised only by bit-equality pytests,
-never timed (r12 verdict, "What's wrong" #1). This tool times every
-dispatch-gated bench query twice per fixture:
+KMeans and DeterministicKMeans Lloyd, connected_components union-find)
+absorb the bench's sf0.1 inputs entirely, so the DISTRIBUTED code paths
+— the ones that matter at 100 TB — were exercised only by bit-equality
+pytests, never timed (r12 verdict, "What's wrong" #1). This tool times
+every dispatch-gated bench query twice per fixture:
 
 - ``driver``: defaults (the dispatch bounds as shipped);
-- ``distributed``: every dispatch bound forced to 0 through the
-  env overrides (DEEPTIME_DRIVER_{TRI,GRAPH}_MAX_EDGES,
-  DEEPTIME_DRIVER_FIT_MAX_ELEMS, DEEPTIME_CC_LOCAL_THRESHOLD,
-  DEEPTIME_KMEANS_DRIVER_DISPATCH=0) — results are bit-identical by the
-  operators' cross-path contracts (pinned in tests/), so both modes run
-  the SAME queries and the oracle stays green either way.
-  DEEPTIME_DRIVER_FIT_MAX_ELEMS gates the deep-estimator fits (VAMPNet,
-  TAE, TVAE) and ``KMeans``, whose driver regime sits under the same
-  bound and whose MLlib regime takes over when it is 0.
-
-Every FORCE_ENV name is checked against the deeptime_spark sources at
-start-up: a mistyped name would otherwise time the driver path under
-the "distributed" label.
+- ``distributed``: ``DEEPTIME_FORCE_DISTRIBUTED=1``, which sends every
+  gated operator (``deeptime_spark.dispatch.on_driver``) down its
+  distributed path — results are bit-identical by the operators'
+  cross-path contracts (pinned in tests/), so both modes run the SAME
+  queries and the oracle stays green either way.
 
 Fixtures: sf0.1 and the x8 replicated weak-scaling dir
 (tools/scale_bench.py's fixture — built on first use). Each
-(fixture, mode) runs in its OWN subprocess because the deep-estimator
-bound is captured at import time.
+(fixture, mode) runs in its OWN subprocess so that both modes start
+from a fresh JVM: no codegen, JIT or cache state carries from one
+mode's timings into the other's.
 
 Usage: python tools/forced_distributed_bench.py [x8]
 Prints one JSON line; record the table in SCALE.md.
@@ -37,7 +30,6 @@ import json
 import os
 import subprocess
 import sys
-from pathlib import Path
 
 QUERIES = [
     # §14 graph kernels
@@ -58,33 +50,14 @@ QUERIES = [
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-FORCE_ENV = {
-    "DEEPTIME_DRIVER_TRI_MAX_EDGES": "0",
-    "DEEPTIME_DRIVER_GRAPH_MAX_EDGES": "0",
-    "DEEPTIME_DRIVER_FIT_MAX_ELEMS": "0",
-    "DEEPTIME_CC_LOCAL_THRESHOLD": "0",
-    "DEEPTIME_KMEANS_DRIVER_DISPATCH": "0",
-}
+FORCE_ENV = {"DEEPTIME_FORCE_DISTRIBUTED": "1"}
 
 _CHILD = """
 import json, os, sys, time
 sys.path.insert(0, {repo!r})
 import __spark_entry__ as entrymod
-from pyspark.sql import SparkSession
-cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-spark = (SparkSession.builder.master(f"local[{{cpus}}]")
-    .appName("forced-distributed-gate")
-    .config("spark.sql.shuffle.partitions", cpus)
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
-    .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=1g")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
+from deeptime_spark.session import get_spark
+spark = get_spark("forced-distributed-gate")
 if {build_x8!r}:
     sys.path.insert(0, os.path.join({repo!r}, "tools"))
     import scale_bench
@@ -108,15 +81,6 @@ spark.stop()
 """
 
 
-def check_force_env() -> None:
-    """Fail unless every FORCE_ENV name occurs in the package sources."""
-    pkg = Path(REPO, "deeptime_spark")
-    text = "\n".join(p.read_text(encoding="utf-8") for p in pkg.rglob("*.py"))
-    missing = [name for name in FORCE_ENV if name not in text]
-    if missing:
-        raise SystemExit(f"FORCE_ENV names not read anywhere in deeptime_spark/: {missing}")
-
-
 def run_child(sf_dir: str, mode: str, build_x8: bool) -> dict:
     env = dict(os.environ)
     if mode == "distributed":
@@ -138,7 +102,6 @@ def run_child(sf_dir: str, mode: str, build_x8: bool) -> dict:
 
 
 def main() -> int:
-    check_force_env()
     with_x8 = "x8" in sys.argv[1:]
     fixtures = [("sf0.1", "/root/testdata/sf0.1", False)]
     if with_x8:

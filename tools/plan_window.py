@@ -18,16 +18,18 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import sys
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, repo)
     import __spark_entry__ as entrymod
 
     qs = list(entrymod.queries().keys())
     evid: dict[str, list[tuple[int, bool]]] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
         rnd = int(path.rsplit("_r", 1)[1].split(".")[0])
         data = json.load(open(path))
         entries = data.get("queries", data) if isinstance(data, dict) else {}

@@ -202,23 +202,9 @@ def build_dir(spark, k: int) -> str:
 def main() -> None:
     ks = [int(a) for a in sys.argv[1:]] or [1, 2, 4, 8]
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from pyspark.sql import SparkSession
+    from deeptime_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("scale-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("scale-bench")
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
@@ -268,7 +254,8 @@ def main() -> None:
         r = results[name]
         if all(v > 0 for v in r.values()) and len(ks) > 1:
             r["slope"] = round(r[f"x{ks[-1]}"] / max(r[f"x{ks[0]}"], 1e-9), 2)
-    print(json.dumps({"queries": results, "ks": ks, "cpus": int(cpus)}))
+    cpus = spark.sparkContext.defaultParallelism
+    print(json.dumps({"queries": results, "ks": ks, "cpus": cpus}))
 
 
 if __name__ == "__main__":

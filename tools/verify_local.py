@@ -11,6 +11,7 @@ Usage: python tools/verify_local.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -31,25 +32,16 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
-    import os
+    # this checkout's code, wherever the script is started from
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
     # literal-value estimator oracles (oracle_ref) must be built against
     # the same sf dir the queries run at
     os.environ["SPARK_GRAFT_ORACLE_SF"] = sf_dir
     import __spark_entry__ as entrymod
+    from deeptime_spark.session import get_spark
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("verify-local")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "6g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("verify-local")
 
     con = duckdb.connect()
     for name in ("region nation customer supplier part orders lineitem events documents embeddings").split():
