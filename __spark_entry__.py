@@ -2228,6 +2228,40 @@ def _q_vamp_score_data_events(spark, sf_dir):
     return _local_df(spark, rows, "score_kind string, score double")
 
 
+def _koopman_propagate_model(spark, sf_dir):
+    """VAMP(lagtime=2, dim=2) of the event-value features (v, v^2, v^3),
+    v = value / 100 = c / 10^4 for the integer cents c (``vc``), built
+    from exact lagged power sums: every raw moment is an integer sum of
+    c-power products over a power of 10^4, summed here as DECIMAL(38,0)
+    (c <= 56021 at sf0.1, so c^6 < 1e29 and a sum over 6.4M rows < 1e36;
+    ANSI overflow would raise), so it is
+    the same for any partitioning and equal to the oracle's Python-int
+    sums, and the model is bit-identical across engines. Float sums
+    differ with the summation order by ~1e-14 relative, and C(0,t),
+    small next to the raw moments it is a difference of, carries that
+    into U at ~3e-10 at sf0.1 — enough to move a 1e-6-rounded column
+    with the partition count."""
+    from deeptime_spark.decomposition.vamp import VAMP
+    from deeptime_spark.oracle_ref import covariance_from_power_sums
+
+    w = Window.partitionBy("traj_id").orderBy("t")
+    c = F.col("vc").cast("decimal(38,0)")
+    pairs = (
+        _event_traj(spark, sf_dir)
+        .select(c.alias("c0"), F.lead(c, 2).over(w).alias("ct"))
+        .where(F.col("ct").isNotNull())
+    )
+    x = [F.col("c0"), F.col("c0") * F.col("c0"), F.col("c0") * F.col("c0") * F.col("c0")]
+    y = [F.col("ct"), F.col("ct") * F.col("ct"), F.col("ct") * F.col("ct") * F.col("ct")]
+    sums = [F.sum(e) for e in x + y]
+    sums += [F.sum(a * b) for u, v in ((x, x), (x, y), (y, y)) for a in u for b in v]
+    r = [int(s) for s in pairs.agg(F.count(F.lit(1)), *sums).first()]
+    # r = n, sx (3), sy (3), then mxx, mxy, myy as 9 row-major sums each
+    mxx, mxy, myy = ([r[k + 3 * p : k + 3 * p + 3] for p in range(3)] for k in (7, 16, 25))
+    cov = covariance_from_power_sums(r[0], r[1:4], mxx, r[4:7], mxy, myy, unit=10**4, lag=2)
+    return VAMP(lagtime=2, dim=2).fit_from_covariances(cov)
+
+
 def _q_koopman_propagate_events(spark, sf_dir):
     """TransferOperatorModel observable-propagation surface
     (decomposition/koopman.py:67-104, reference _koopman.py:14-129):
@@ -2239,28 +2273,21 @@ def _q_koopman_propagate_events(spark, sf_dir):
     numpy parity with this column is pinned in tests/test_r12_ops.py).
     Projections are whole-stage-codegen column expressions; the oracle
     re-applies the literal coefficient matrices to SQL-re-derived
-    features. Coefficients are parity-quantized to 9 decimals on both
-    sides: the distributed covariance sums differ from the oracle's
-    numpy replay in the last ulps (~1e-14), which the SVD carries into
-    U/V; snapping both estimates to 1e-9 (far above that noise, far
-    below the 1e-6 output rounding) makes the per-row expressions
-    bit-identical across engines instead of boundary-lucky."""
+    features. The model comes from exact integer moments
+    (``_koopman_propagate_model``), so both engines apply the same
+    coefficients and the per-row expressions are bit-identical."""
     import numpy as np
 
     from deeptime_spark.decomposition.koopman import TransferOperatorModel
-    from deeptime_spark.decomposition.vamp import VAMP
 
-    traj = _event_traj(spark, sf_dir)
     v = F.col("value") / 100.0
-    feat = traj.select("traj_id", "t", F.array(v, v * v, v * v * v).alias("x"))
-    model = VAMP(lagtime=2, dim=2).fit(feat).fetch_model()
-    sv = np.round(model.singular_values, 9)
+    feat = _event_traj(spark, sf_dir).select(
+        "traj_id", "t", F.array(v, v * v, v * v * v).alias("x")
+    )
+    model = _koopman_propagate_model(spark, sf_dir)
+    sv = model.singular_values
     qm = TransferOperatorModel(
-        np.diag(sv),
-        np.round(model.U, 9),
-        np.round(model.V, 9),
-        mean_0=model.mean_0,
-        mean_t=model.mean_t,
+        np.diag(sv), model.U, model.V, mean_0=model.mean_0, mean_t=model.mean_t
     )
     f = qm.transform(feat, out_col="f")
     both = qm.transform(f, propagate=True, out_col="g")

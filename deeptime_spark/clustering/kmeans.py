@@ -15,7 +15,7 @@ _kmeans.py:148-472; C++ Lloyd loop kmeans_bits.h with OpenMP) and
   :24-56) or ``initial_centers``, then a blocked Lloyd loop. Two Spark
   jobs in all, and the result does not depend on partition layout —
   the split the reference keeps between its C++ kernels and numpy.
-- **MLlib** (larger inputs, a probe that overflows, or
+- **MLlib** (larger inputs, fewer rows than ``n_clusters``, or
   ``DEEPTIME_FORCE_DISTRIBUTED=1``, which skips the probe): MLlib's KMeans,
   whose k-means|| init (Bahmani et al.) is the distributed analogue of
   kmeans++ and whose Lloyd iterations are map-side partial aggregations.
@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from deeptime_spark.base import Estimator
 from deeptime_spark.clustering.cluster_model import ClusterModel, _pairwise_sq_dists
-from deeptime_spark.dispatch import on_driver
+from deeptime_spark.dispatch import forced, on_driver
 
 # rows per distance block in the driver Lloyd loop: peak memory is
 # O(block * k) floats whatever the number of rows
@@ -132,26 +132,26 @@ class KMeans(Estimator):
         At most two jobs: the width probe and one Arrow collect, both
         skipped when the distributed path is forced."""
         from deeptime_spark.decomposition.deep import DRIVER_FIT_MAX_ELEMS as bound
-        from deeptime_spark.operators.moments import feature_dim
 
-        X = None
-
-        def rows_x_d() -> int:
-            # the size probe: at most bound // d + 1 rows, so an input
-            # past the bound shows as one row too many; when n_clusters
-            # rows alone overflow the bound nothing is collected
-            nonlocal X
-            d = feature_dim(df, self.x_col)
-            cap = bound // d if d else 0
-            if cap < self.n_clusters:
-                return self.n_clusters * d
-            cols = [F.col(self.x_col).getItem(j).alias(f"_x{j}") for j in range(d)]
-            X = df.select(*cols).limit(cap + 1).toPandas().to_numpy(dtype=np.float64)
-            return X.size
-
-        if not on_driver("KMeans", rows_x_d, bound) or X is None or len(X) < self.n_clusters:
+        X = None if forced() else self._collect_capped(df, bound)
+        # fewer rows than clusters: the driver fit cannot run, MLlib does
+        size = X.size if X is not None and len(X) >= self.n_clusters else None
+        if not on_driver("KMeans", size, bound):
             return None
         return X[np.lexsort(X.T[::-1])]
+
+    def _collect_capped(self, df: DataFrame, bound: int) -> Optional[np.ndarray]:
+        """The size probe: at most ``bound // d + 1`` rows, so an input
+        past the bound shows as one row too many. None, with nothing
+        collected, when ``n_clusters`` rows alone overflow the bound."""
+        from deeptime_spark.operators.moments import feature_dim
+
+        d = feature_dim(df, self.x_col)
+        cap = bound // d if d else 0
+        if cap < self.n_clusters:
+            return None
+        cols = [F.col(self.x_col).getItem(j).alias(f"_x{j}") for j in range(d)]
+        return df.select(*cols).limit(cap + 1).toPandas().to_numpy(dtype=np.float64)
 
     def _init_centers(self, X: np.ndarray) -> np.ndarray:
         if self.initial_centers is not None:

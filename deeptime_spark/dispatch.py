@@ -19,22 +19,26 @@ from __future__ import annotations
 
 import logging
 import os
-from typing import Callable, Union
+from typing import Optional
 
 log = logging.getLogger(__name__)
 
 FORCE_ENV = "DEEPTIME_FORCE_DISTRIBUTED"
 
 
-def on_driver(name: str, estimate: Union[int, Callable[[], int]], bound: int) -> bool:
-    """True when ``name`` should run on the driver: ``estimate <= bound``
-    and the force switch is off.
+def forced() -> bool:
+    """True when ``DEEPTIME_FORCE_DISTRIBUTED=1``: an operator whose size
+    probe is itself costly checks this first and skips the probe."""
+    return os.environ.get(FORCE_ENV) == "1"
 
-    ``estimate`` may be a zero-argument callable for operators whose size
-    probe is itself a collect; it is not called when the switch is set."""
-    forced = os.environ.get(FORCE_ENV) == "1"
-    if callable(estimate):
-        estimate = None if forced else estimate()
-    choice = "distributed" if forced or estimate > bound else "driver"
+
+def on_driver(name: str, estimate: Optional[int], bound: int) -> bool:
+    """True when ``name`` should run on the driver: ``estimate <= bound``
+    and the force switch is off. ``estimate`` is None when the operator
+    has no driver-sized input (it skipped its probe under the switch, or
+    the probe found an input the driver path cannot take); that input
+    goes distributed."""
+    driver = not forced() and estimate is not None and estimate <= bound
+    choice = "driver" if driver else "distributed"
     log.info("dispatch %s estimate=%s bound=%s -> %s", name, estimate, bound, choice)
-    return choice == "driver"
+    return driver

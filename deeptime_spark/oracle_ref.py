@@ -154,6 +154,43 @@ def _covariance_model(sf: str, lag: int, n_powers: int, remove_mean=True,
     )
 
 
+def covariance_from_power_sums(n, sx, mxx, sy, mxy, myy, unit: int, lag: int):
+    """Mean-free, Bessel-corrected CovarianceModel (as ``VAMP.fit``) of
+    the features x_p = (c / unit)^(p+1) of an integer series c, from
+    exact integer sums over the n lagged pairs (c0, ct): sx[p] = sum
+    c0^(p+1), mxx[p][q] = sum c0^(p+1) c0^(q+1), mxy[p][q] = sum
+    c0^(p+1) ct^(q+1), and likewise sy, myy. Each float moment is one
+    correctly rounded int / int division, so equal sums give
+    bit-identical models whatever order they were summed in."""
+    from deeptime_spark.covariance import CovarianceModel
+    from deeptime_spark.operators.moments import MomentsResult
+
+    d = len(sx)
+    vec = lambda S: np.array([int(S[p]) / unit ** (p + 1) for p in range(d)])  # noqa: E731
+    mat = lambda S: np.array(  # noqa: E731
+        [[int(S[p][q]) / unit ** (p + q + 2) for q in range(d)] for p in range(d)]
+    )
+    m = MomentsResult(
+        weight_sum=float(n), sx=vec(sx), mxx=mat(mxx), sy=vec(sy), mxy=mat(mxy), myy=mat(myy)
+    )
+    c00, c0t, ctt, mx, my = m.covariances(
+        remove_mean=True, bessels_correction=True, symmetrize=False
+    )
+    return CovarianceModel(
+        cov_00=c00, cov_0t=c0t, cov_tt=ctt, mean_0=mx, mean_t=my,
+        bessels_correction=True, symmetrized=False, lagtime=lag, weight_sum=float(n),
+    )
+
+
+def _cents_power_sums(sf: str, lag: int, n_powers: int):
+    """The exact integer sums ``covariance_from_power_sums`` takes, over
+    the event values in integer cents (Python ints: no overflow)."""
+    _, _, value, _ = _traj(sf)
+    c = np.round(value * 100).astype(np.int64).astype(object)
+    X, Y = _per_traj_pairs(sf, lag, np.stack([c ** (p + 1) for p in range(n_powers)], axis=1))
+    return len(X), X.sum(axis=0), X.T @ X, Y.sum(axis=0), X.T @ Y, Y.T @ Y
+
+
 @lru_cache(maxsize=8)
 def _msm(sf: str, lag: int):
     """Reversible-MLE MarkovStateModel from the DuckDB counts (largest
@@ -407,19 +444,16 @@ def oracle_koopman_propagate(round_to: int = 6) -> str:
     """TransferOperatorModel projection replica (koopman.py:67-104):
     SQL re-derives the features and applies the literal f-space
     (U, mean_0), g-space (V, mean_t) and forward (sigma_k * f_k)
-    expressions — coefficients from the independently-estimated
-    covariances. Rounding goes through _sql_sround so half-way reprs
-    match Spark bit-for-bit."""
+    expressions — coefficients from covariances built from exact integer
+    power sums computed here in numpy. Rounding goes through
+    _sql_sround so half-way reprs match Spark bit-for-bit."""
     from deeptime_spark.decomposition.vamp import VAMP
 
-    cov = _covariance_model(sf_dir(), 2, 3)
+    # exact cents power sums, as _q_koopman_propagate_events: both
+    # engines reach the same covariances, so the same U, V and sigma
+    cov = covariance_from_power_sums(*_cents_power_sums(sf_dir(), 2, 3), unit=10**4, lag=2)
     model = VAMP(lagtime=2, dim=2).fit_from_covariances(cov)
-    # parity quantization — see _q_koopman_propagate_events: snap both
-    # engines' coefficient estimates to 1e-9 so the 1e-14 covariance
-    # ulp noise cannot reach the per-row expressions
-    sv = np.round(model.singular_values, 9)
-    U = np.round(model.U, 9)
-    V = np.round(model.V, 9)
+    sv, U, V = model.singular_values, model.U, model.V
 
     def proj(W, mu, k):
         return " + ".join(

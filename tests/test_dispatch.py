@@ -6,7 +6,7 @@ import logging
 
 import numpy as np
 
-from deeptime_spark.dispatch import FORCE_ENV, on_driver
+from deeptime_spark.dispatch import FORCE_ENV, forced, on_driver
 
 GATED = (
     "triangle_counts",
@@ -24,24 +24,34 @@ GATED = (
 
 def test_on_driver_compares_estimate_with_bound(monkeypatch):
     monkeypatch.delenv(FORCE_ENV, raising=False)
+    assert not forced()
     assert on_driver("t", 10, 10)
     assert not on_driver("t", 11, 10)
-    assert on_driver("t", lambda: 3, 10)
-    assert not on_driver("t", lambda: 30, 10)
+    # no driver-sized input: distributed
+    assert not on_driver("t", None, 10)
 
 
-def test_force_switch_skips_the_estimate(force_distributed):
-    calls = []
-
-    def probe():
-        calls.append(1)
-        return 0
-
+def test_force_switch_overrides_the_bound(force_distributed):
     with force_distributed():
+        assert forced()
         assert not on_driver("t", 0, 10)
-        assert not on_driver("t", probe, 10)
-    assert calls == []
-    assert on_driver("t", probe, 10) and calls == [1]
+    assert not forced()
+
+
+def test_kmeans_logs_the_path_it_takes(spark, caplog, monkeypatch):
+    """Fewer rows than clusters fit the bound but not the driver fit:
+    KMeans logs "distributed" and leaves the driver path."""
+    from deeptime_spark.clustering.kmeans import KMeans
+
+    monkeypatch.delenv(FORCE_ENV, raising=False)
+    two = spark.createDataFrame([([0.0, 1.0],), ([2.0, 3.0],)], "x array<double>")
+    with caplog.at_level(logging.INFO, logger="deeptime_spark.dispatch"):
+        assert KMeans(n_clusters=3)._driver_rows(two) is None
+        assert KMeans(n_clusters=2)._driver_rows(two) is not None
+    assert [r.args[3] for r in caplog.records
+                        if r.name == "deeptime_spark.dispatch" and r.args[0] == "KMeans"] == [
+        "distributed", "driver"
+    ]
 
 
 def _run_every_gated_operator(spark):

@@ -144,9 +144,8 @@ def test_transfer_operator_forward_matches_columns(spark):
         spark, "/root/testdata/sf0.001"
     )
     rows = df.orderBy("traj_id", "t").limit(5).collect()
-    # rebuild the same quantized model to drive forward()
+    # rebuild the same model to drive forward()
     from deeptime_spark.decomposition.koopman import TransferOperatorModel
-    from deeptime_spark.decomposition.vamp import VAMP
 
     traj = entrymod._event_traj(spark, "/root/testdata/sf0.001")
     feat = traj.select(
@@ -158,12 +157,11 @@ def test_transfer_operator_forward_matches_columns(spark):
             (F.col("value") / 100.0) ** 3,
         ).alias("x"),
     )
-    model = VAMP(lagtime=2, dim=2).fit(feat).fetch_model()
-    sv = np.round(model.singular_values, 9)
+    model = entrymod._koopman_propagate_model(spark, "/root/testdata/sf0.001")
     qm = TransferOperatorModel(
-        np.diag(sv),
-        np.round(model.U, 9),
-        np.round(model.V, 9),
+        np.diag(model.singular_values),
+        model.U,
+        model.V,
         mean_0=model.mean_0,
         mean_t=model.mean_t,
     )
@@ -437,3 +435,29 @@ def test_graph_driver_dispatch_bit_equal(spark, force_distributed):
     )
     assert d == s and d
 
+
+
+def test_koopman_propagate_model_is_exact(spark):
+    """The koopman_propagate_events model comes from exact integer power
+    sums: the same bits for any shuffle partitioning, and equal to the
+    oracle's numpy Python-int sums."""
+    import numpy as np
+
+    import __spark_entry__ as entrymod
+    from deeptime_spark.decomposition.vamp import VAMP
+    from deeptime_spark.oracle_ref import _cents_power_sums, covariance_from_power_sums
+
+    sf = "/root/testdata/sf0.001"
+    models = []
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for parts in ("1", "7"):
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            models.append(entrymod._koopman_propagate_model(spark, sf))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    cov = covariance_from_power_sums(*_cents_power_sums(sf, 2, 3), unit=10**4, lag=2)
+    models.append(VAMP(lagtime=2, dim=2).fit_from_covariances(cov))
+    for m in models[1:]:
+        for k in ("U", "V", "singular_values", "mean_0", "mean_t"):
+            assert np.array_equal(getattr(m, k), getattr(models[0], k)), k
